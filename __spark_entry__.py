@@ -11245,7 +11245,7 @@ def oracle_sql() -> dict[str, str]:
         "fim_transform": """
             WITH t AS (
               SELECT doc_id,
-                     list_filter(regexp_split_to_array(text, '[\t\n\x0B\f\r\x85\pZ]+'), w -> w != '') AS tk
+                     list_filter(regexp_split_to_array(text, '[\t\n\x0B\f\r\x85\\pZ]+'), w -> w != '') AS tk
               FROM documents
             ),
             c AS (

@@ -33,8 +33,10 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField
 
 from .functions.text import text_match_score
 from .operators import ann, filters, fusion, quantization, search, sparse
@@ -2568,27 +2570,34 @@ class GrapeVectorDB:
     ) -> DataFrame:
         """Batch vector search (reference J1 batch kNN as the facade
         endpoint): top-``limit`` per query vector over the (filtered)
-        corpus in ONE corpus scan — the queries broadcast, per-query
-        top-k pre-reduced per scan partition (operators.search.knn_batch,
-        the 1-query-or-1M-queries-uniformly shape). Returns (query_id,
-        vec_id, score, rank) where query_id is the 0-based position in
-        ``vectors``. The filter uses the same posting-algebra-when-
-        servable gate as every example-based endpoint.
+        corpus in ONE corpus scan — the vectors go straight into
+        knn_batch's Arrow scoring kernel (operators.search.
+        knn_batch_arrow), with no query DataFrame built per call. Returns
+        (query_id, vec_id, score, rank) where query_id is the 0-based
+        position in ``vectors``. The filter uses the same posting-
+        algebra-when-servable gate as every example-based endpoint.
         ``with_documents=True`` hydrates the (N x limit)-row result via
         the shared broadcast id-join."""
         if not vectors:
             raise ValueError("at least one query vector is required")
         limit, _ = clamp_request(limit, None)
         emb = self._filtered_candidates(self.embeddings(), filter)
-        queries = self.spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(vectors)],
-            "query_id long, query_vec array<double>",
+        queries = pa.table(
+            {
+                "query_id": pa.array(range(len(vectors)), pa.int64()),
+                "query_vec": pa.array(
+                    [[float(x) for x in v] for v in vectors],
+                    pa.list_(pa.float64()),
+                ),
+            }
         )
-        hits = search.knn_batch(
-            emb, queries, k=limit, corpus_vec=self.vec_col
-        ).withColumnRenamed(
-            "id", "vec_id"
-        )
+        hits = search.knn_batch_arrow(
+            emb,
+            queries,
+            StructField("query_id", LongType()),
+            k=limit,
+            corpus_vec=self.vec_col,
+        ).withColumnRenamed("id", "vec_id")
         if with_documents:
             return self._hydrate(
                 hits, [F.col("query_id").asc(), F.col("rank").asc()]

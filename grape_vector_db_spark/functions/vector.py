@@ -5,14 +5,21 @@ Reference semantics reproduced exactly:
   (src/storage.rs:851-865).
 - euclidean_distance = sqrt(sum((x-y)^2)) (src/index.rs:68-79).
 
-Everything here is a Catalyst ``Column`` built from higher-order functions
-(``zip_with`` / ``aggregate`` / ``transform``), so the math runs JVM-side
-inside whole-stage codegen — no Python in the hot path, no UDF serialization,
-and Catalyst can still push filters/projections around it. All arithmetic is
-performed in DOUBLE (inputs are ``array<float>`` parquet columns; we cast
-up-front) with a strict left-to-right fold, which makes results bit-identical
-to a sequential C/DuckDB evaluation of the same formula — required for the
-driver's DuckDB-oracle hash comparison.
+The Column kit is built from higher-order functions (``zip_with`` /
+``aggregate`` / ``transform``). They run JVM-side with no Python worker and
+Catalyst can still push filters/projections around them, but Spark
+interprets their lambdas once per array ELEMENT — they are not compiled by
+whole-stage codegen. That is cheap for one query vector against the corpus;
+for many query vectors per row (a broadcast query table, a plane family)
+use the Arrow twin below, :func:`arrow_vector_rows` + :func:`fold_dots` /
+:func:`fold_norms`, inside one ``mapInArrow`` kernel (operators.search
+``knn_batch``, operators.ann ``_rp_fold_arrow``).
+
+All arithmetic is performed in DOUBLE (inputs are ``array<float>`` parquet
+columns; we cast up-front) with a strict left-to-right fold, which makes
+results bit-identical to a sequential C/DuckDB evaluation of the same
+formula — required for the DuckDB-oracle hash comparison. The
+Arrow twin runs the same IEEE sequence, so both forms agree bit for bit.
 
 At 100 TB these expressions scan columnar parquet vectors with zero shuffle;
 a k-NN over them is embarrassingly parallel per-partition work followed by a
@@ -23,6 +30,8 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -123,3 +132,53 @@ def euclidean_distance(a: Column, b: Column) -> Column:
             lambda acc, x: acc + x,
         )
     )
+
+
+def arrow_vector_rows(vec: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """The rows of an Arrow ``list<double>`` column that :func:`dot`
+    against a length-``dim`` vector scores, and their values:
+    ``(valid, X)`` with ``valid`` a bool mask over all rows and ``X`` the
+    ``(valid.sum(), dim)`` float64 matrix of the valid rows.
+
+    A row is invalid — its Catalyst fold is NULL — when the vector is
+    NULL, holds a NULL element (``acc + NULL`` is NULL), or its length is
+    not ``dim`` (``zip_with`` pads the shorter side with NULL). Callers
+    map invalid rows to whatever their SQL form makes of a NULL fold."""
+    vec = vec.cast(pa.list_(pa.float64()))  # fixed_size_list safety
+    offsets = vec.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    lengths = offsets[1:] - offsets[:-1]
+    valid = vec.is_valid().to_numpy(zero_copy_only=False) & (lengths == dim)
+    vals = vec.values
+    if vals.null_count:
+        child_null = vals.is_null().to_numpy(zero_copy_only=False).astype(np.int64)
+        cums = np.concatenate(([0], np.cumsum(child_null)))
+        valid &= (cums[offsets[1:]] - cums[offsets[:-1]]) == 0
+    nv = int(valid.sum())
+    if not nv:
+        return valid, np.zeros((0, dim), dtype=np.float64)
+    vnp = vals.to_numpy(zero_copy_only=False)
+    starts = offsets[:-1][valid]
+    idx = (starts[:, None] + np.arange(dim, dtype=np.int64)).ravel()
+    return valid, vnp[idx].reshape(nv, dim)
+
+
+def fold_dots(X: np.ndarray, P: np.ndarray) -> np.ndarray:
+    """Every row of ``X`` (n, dim) against every row of ``P`` (m, dim) as
+    :func:`dot`'s exact fold ``((0.0 + x0*p0) + x1*p1) + ...``: one IEEE
+    multiply and one IEEE add per dimension, in left-to-right order,
+    vectorized across (rows, P rows). Never numpy.dot/matmul/einsum,
+    whose pairwise or SIMD summation reorders the adds — so every
+    intermediate double equals the JVM fold's. Returns (n, m)."""
+    out = np.zeros((X.shape[0], P.shape[0]), dtype=np.float64)
+    for i in range(X.shape[1]):
+        out += X[:, i : i + 1] * P[None, :, i]
+    return out
+
+
+def fold_norms(X: np.ndarray) -> np.ndarray:
+    """:func:`l2_norm` of every row of ``X`` (n, dim) — the same
+    left-to-right sum-of-squares fold, then one correctly rounded sqrt."""
+    acc = np.zeros(X.shape[0], dtype=np.float64)
+    for i in range(X.shape[1]):
+        acc += X[:, i] * X[:, i]
+    return np.sqrt(acc)

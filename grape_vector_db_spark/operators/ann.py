@@ -42,9 +42,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import (
+    arrow_vector_rows,
     cosine_from_parts,
     cosine_similarity,
     dot,
+    fold_dots,
     l2_norm,
     to_double_array,
     vector_lit,
@@ -1385,18 +1387,18 @@ def _rp_fold_arrow(
     batches to vectorized native code). Results are BIT-IDENTICAL to the
     SQL fold, proven by construction rather than by an epsilon guard:
     the kernel executes the SAME left-to-right IEEE-754 sequence
-    acc = ((0.0 + v[0]*p[0]) + v[1]*p[1]) + ... for every (row, plane) —
-    vectorized ACROSS rows (one numpy multiply + one add per dimension,
-    never numpy.dot/matmul, whose pairwise/SIMD summation reorders the
-    adds) — so every intermediate double equals the JVM fold's and no
-    near-zero sign flip is possible. Scaling (rp_project's
-    sqrt(3/n_out)) is one final IEEE multiply, same as the SQL shape.
+    acc = ((0.0 + v[0]*p[0]) + v[1]*p[1]) + ... for every (row, plane)
+    (functions.vector.fold_dots), so every intermediate double equals
+    the JVM fold's and no near-zero sign flip is possible. Scaling
+    (rp_project's sqrt(3/n_out)) is one final IEEE multiply, same as the
+    SQL shape.
 
-    Degenerate rows reproduce the fold's null algebra exactly: a NULL
-    vector, a NULL element, or a length != dim makes zip_with/aggregate
-    yield a NULL dot, which the CASE sign turns into bit 0 (bucket 0)
-    and rp_project surfaces as a NULL component — the kernel routes any
-    such row to all-zero buckets / all-NULL components.
+    Degenerate rows reproduce the fold's null algebra exactly
+    (functions.vector.arrow_vector_rows): a NULL vector, a NULL element,
+    or a length != dim makes zip_with/aggregate yield a NULL dot, which
+    the CASE sign turns into bit 0 (bucket 0) and rp_project surfaces as
+    a NULL component — the kernel routes any such row to all-zero
+    buckets / all-NULL components.
     """
     import pyarrow as pa
 
@@ -1414,37 +1416,13 @@ def _rp_fold_arrow(
         out_schema = f"id {id_type}, _rp array<double>"
 
     def fold(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        list_f64 = pa.list_(pa.float64())
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
             ids = batch.column(0)
-            vec = batch.column(1).cast(list_f64)  # fixed_size_list safety
-            offsets = vec.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            lengths = offsets[1:] - offsets[:-1]
-            valid = vec.is_valid().to_numpy(zero_copy_only=False) & (
-                lengths == dim
-            )
-            vals = vec.values
-            if vals.null_count:
-                child_null = vals.is_null().to_numpy(
-                    zero_copy_only=False
-                ).astype(np.int64)
-                cums = np.concatenate(([0], np.cumsum(child_null)))
-                valid &= (cums[offsets[1:]] - cums[offsets[:-1]]) == 0
-            nv = int(valid.sum())
-            dots = np.zeros((nv, total), dtype=np.float64)
-            if nv:
-                vnp = vals.to_numpy(zero_copy_only=False)
-                starts = offsets[:-1][valid]
-                idx = (starts[:, None] + np.arange(dim, dtype=np.int64)).ravel()
-                X = vnp[idx].reshape(nv, dim)
-                # the exact fold, vectorized across (rows, planes): one
-                # IEEE multiply + one IEEE add per dimension, in the
-                # fold's left-to-right order
-                for i in range(dim):
-                    dots += X[:, i : i + 1] * P[None, :, i]
+            valid, X = arrow_vector_rows(batch.column(1), dim)
+            dots = fold_dots(X, P)
             if mode == "buckets":
                 bits = np.zeros((n, total), dtype=np.int64)
                 # Spark orders NaN GREATER than every double (its CASE

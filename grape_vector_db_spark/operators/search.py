@@ -4,7 +4,7 @@ Brute-force k-NN is the correctness anchor (the reference's
 ``vector_search``, src/storage.rs:296-339: scan all docs, cosine, threshold,
 sort desc, truncate k). In Spark this is:
 
-    scan (columnar, no shuffle) -> cosine expression (codegen) ->
+    scan (columnar, no shuffle) -> cosine expression (JVM-side HOF fold) ->
     WHERE score >= t (pushed ahead of the sort) ->
     ORDER BY score DESC LIMIT k  => physical TakeOrderedAndProject:
     per-partition top-k heaps + an O(parts*k) driver merge — exactly the
@@ -14,23 +14,31 @@ sort desc, truncate k). In Spark this is:
 At 100 TB / 1000 executors this plan has **zero shuffles**: each task scans
 its parquet split, keeps a k-row heap, and ships k rows to the driver.
 
-Batch k-NN (a query *table* instead of one vector) broadcasts the query side
-into a BroadcastNestedLoopJoin so the corpus is still scanned exactly once
-with no shuffle; per-query top-k is a window over the (small) result.
+Batch k-NN (a query *table* instead of one vector) ships the query set with
+one Arrow kernel, so the corpus is still scanned exactly once with no
+shuffle below the scoring; per-query top-k is a window over the (small)
+per-batch candidate set the kernel emits.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.vector import (
+    arrow_vector_rows,
     cosine_from_parts,
     dot,
     euclidean_distance,
+    fold_dots,
+    fold_norms,
     l2_norm,
     to_double_array,
     vector_lit,
@@ -340,59 +348,182 @@ def knn_batch(
     query_vec: str = "query_vec",
     exclude_col: str | None = None,
 ) -> DataFrame:
-    """Top-k per query for a whole query table (1 or 1M queries uniformly).
+    """Top-k cosine per query for a whole query table. Output:
+    (query_id, id, score, rank), score rounded to 6 dp, ranked by
+    (score desc, id asc) per query_id.
 
-    ``broadcast(queries) crossJoin corpus`` -> cosine -> two-stage
-    per-query top-k: a per-(query, input-partition) pre-reduction caps
-    every scored stream at k rows per scan partition BEFORE the global
-    per-query window (see _partition_local_topk) — without it a single
-    query's window partition holds the WHOLE scored corpus in one task.
-    The corpus (the 100 TB side) is scanned once with no shuffle; the
-    broadcast side must be the small one. Output: (query_id, id, score, rank).
+    The query table is collected to the driver ONCE, here — it must be
+    the small side — and scored by :func:`knn_batch_arrow`: one
+    ``mapInArrow`` kernel over a single corpus scan, no shuffle below
+    the scoring. See there for the exactness argument.
 
     ``exclude_col`` names an array<id> column on ``queries``: those
     corpus ids are dropped from that query's candidates INSIDE the
-    scan stage, before any top-k — the zero-shuffle form of the
-    over-fetch + anti-join + re-rank exclusion (the arrays ride the
-    queries broadcast, so they must be per-query bounded).
+    kernel, before any top-k (a NULL array excludes nothing). The
+    arrays ship with the queries, so they must be per-query bounded.
     """
-    qv = to_double_array(query_vec)
-    qcols = [
+    cols = [
         F.col(query_id).alias("query_id"),
-        qv.alias("_qv"),
-        l2_norm(qv).alias("_qn"),
+        to_double_array(query_vec).alias("query_vec"),
     ]
     if exclude_col is not None:
-        qcols.append(F.col(exclude_col).alias("_excl"))
-    q = F.broadcast(queries.select(*qcols))
-    cv = to_double_array(corpus_vec)
-    c = corpus.select(
-        F.col(corpus_id).alias("id"), cv.alias("_cv"), l2_norm(cv).alias("_cn")
+        cols.append(F.col(exclude_col).alias("exclude"))
+    q = queries.select(*cols)
+    return knn_batch_arrow(
+        corpus,
+        q.toArrow(),
+        q.schema["query_id"],
+        k=k,
+        threshold=threshold,
+        corpus_id=corpus_id,
+        corpus_vec=corpus_vec,
     )
-    joined = c.crossJoin(q)
-    if exclude_col is not None:
-        # NULL-safe: a query with a NULL exclusion array excludes
-        # nothing (where(NULL) would silently drop its every candidate)
-        joined = joined.where(
-            F.coalesce(
-                ~F.array_contains(F.col("_excl"), F.col("id")), F.lit(True)
-            )
+
+
+# Per-chunk score budget of the knn_batch kernel, in doubles (8 MiB): a
+# batch is scored against at most _SCORE_BLOCK // batch_rows queries at a
+# time, so a huge query set never builds one rows x queries block.
+_SCORE_BLOCK = 1 << 20
+# Two raw scores can round (6 dp, HALF_UP) to the same value only when
+# they are less than 1e-6 apart; anything further below a batch's k-th
+# raw score rounds strictly below it, so k rows outrank it. Doubled to
+# absorb the rounding of the subtraction itself.
+_TIE_SLACK = 2e-6
+
+
+def _query_groups(qv: pa.Array) -> list[tuple]:
+    """Driver-side query packing: ``(positions, Q, |Q|)`` per distinct
+    vector length, with each group's norms folded exactly as
+    :func:`l2_norm` does. Queries the fold scores as NULL against every
+    row (a NULL vector or a NULL element) form one last group with
+    ``Q = None``; every one of their scores is 0.0."""
+    lengths = pc.list_value_length(qv).drop_null().unique().to_pylist()
+    groups = []
+    scored = np.zeros(len(qv), dtype=bool)
+    for d in sorted(lengths):
+        valid, Q = arrow_vector_rows(qv, d)
+        if valid.any():
+            groups.append((np.nonzero(valid)[0], Q, fold_norms(Q)))
+            scored |= valid
+    if not scored.all():
+        groups.append((np.nonzero(~scored)[0], None, None))
+    return groups
+
+
+def knn_batch_arrow(
+    corpus: DataFrame,
+    queries: pa.Table,
+    query_id_field: StructField,
+    k: int = 10,
+    threshold: float | None = None,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+) -> DataFrame:
+    """:func:`knn_batch` over a query set already on the driver: an Arrow
+    table with ``query_id``, ``query_vec`` (list<double>) and an optional
+    ``exclude`` (list<id>) column; ``query_id_field`` is the Spark field
+    the output's query_id takes. The facade's ``search_batch`` hands its
+    vectors in here directly.
+
+    One ``mapInArrow`` kernel scans the corpus once. The query set rides
+    the kernel's closure, which PySpark ships to executors as a broadcast
+    variable once it outgrows its inline-command threshold. Per Arrow
+    batch the kernel computes every (row, query) cosine as
+    ``cosine_from_parts(dot, |c|, |q|)`` does — the same left-to-right
+    IEEE folds (functions.vector.fold_dots / fold_norms), a zero
+    divisor scoring 0.0 like ``coalesce(try_divide(...), 0.0)`` — so the
+    raw doubles are bit-identical to the Catalyst fold's. Rows the fold
+    scores NULL (NULL vector, NULL element, length mismatch) score 0.0;
+    zero-norm vectors score 0.0.
+
+    Per query the kernel then emits only the batch rows whose raw score
+    is within ``_TIE_SLACK`` of the batch's k-th raw score, plus every
+    NaN row (Spark orders NaN above every double). A row further below
+    is outranked by k rows of its own batch after 6-dp rounding, so
+    dropping it cannot change the top-k. Spark keeps the ``round``, the
+    threshold filter and the (score desc, id asc) ``row_number``, so
+    ranking and ties are decided exactly where the SQL form decides
+    them. Queries are scored in chunks of ``_SCORE_BLOCK // rows``, so
+    kernel memory stays bounded for any number of queries."""
+    qids = queries.column("query_id").combine_chunks()
+    groups = _query_groups(queries.column("query_vec").combine_chunks())
+    excludes = None
+    if "exclude" in queries.column_names:
+        # a NULL element excludes nothing, and a NULL corpus id is never
+        # in the null-free value set, so it is never excluded
+        excludes = [
+            pa.array([x for x in ex if x is not None]) if ex else None
+            for ex in queries.column("exclude").to_pylist()
+        ]
+    kk = max(k, 1)  # k < 1 keeps nothing anyway: the rank filter drops all
+
+    base = corpus.select(
+        F.col(corpus_id).alias("id"), to_double_array(corpus_vec).alias("v")
+    )
+    id_field = base.schema["id"]
+    out_schema = StructType(
+        [
+            StructField("query_id", query_id_field.dataType, query_id_field.nullable),
+            StructField("id", id_field.dataType, id_field.nullable),
+            StructField("raw", DoubleType(), False),
+        ]
+    )
+
+    def emit(ids: pa.Array, S: np.ndarray, qpos: np.ndarray) -> pa.RecordBatch:
+        n = S.shape[0]
+        key = np.where(np.isnan(S), np.inf, S)
+        keep = None
+        if excludes is not None:
+            keep = np.ones(S.shape, dtype=bool)
+            for j, p in enumerate(qpos):
+                if excludes[p]:
+                    hit = pc.is_in(ids, value_set=excludes[p])
+                    keep[:, j] = ~hit.to_numpy(zero_copy_only=False)
+            key[~keep] = -np.inf
+        if n > kk:
+            kth = np.partition(key, n - kk, axis=0)[n - kk]
+            sel = key >= kth - _TIE_SLACK
+        else:
+            sel = np.ones(S.shape, dtype=bool)
+        if keep is not None:
+            sel &= keep
+        r, j = np.nonzero(sel)
+        return pa.RecordBatch.from_arrays(
+            [qids.take(pa.array(qpos[j])), ids.take(pa.array(r)), pa.array(S[r, j])],
+            ["query_id", "id", "raw"],
         )
-    scored = joined.select(
-        "query_id",
-        "id",
-        F.round(
-            cosine_from_parts(
-                dot(F.col("_cv"), F.col("_qv")), F.col("_cn"), F.col("_qn")
-            ),
-            6,
-        ).alias("score"),
+
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # inf/NaN operands fold to inf/NaN silently, as on the JVM
+        with np.errstate(all="ignore"):
+            for batch in batches:
+                n = batch.num_rows
+                if n == 0:
+                    continue
+                ids, vec = batch.column(0), batch.column(1)
+                chunk = max(1, _SCORE_BLOCK // n)
+                for qpos, Q, qn in groups:
+                    if Q is not None:
+                        valid, X = arrow_vector_rows(vec, Q.shape[1])
+                        cn = fold_norms(X)
+                    for start in range(0, len(qpos), chunk):
+                        part = slice(start, start + chunk)
+                        S = np.zeros((n, len(qpos[part])), dtype=np.float64)
+                        if Q is not None:
+                            den = cn[:, None] * qn[None, part]
+                            S[valid] = np.divide(
+                                fold_dots(X, Q[part]),
+                                den,
+                                out=np.zeros_like(den),
+                                where=den != 0,
+                            )
+                        yield emit(ids, S, qpos[part])
+
+    scored = base.mapInArrow(score, out_schema).select(
+        "query_id", "id", F.round("raw", 6).alias("score")
     )
     if threshold is not None:
         scored = scored.where(F.col("score") >= threshold)
-    scored = _partition_local_topk(
-        scored, "query_id", F.col("score").desc(), F.col("id").asc(), k=k
-    )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -505,6 +636,10 @@ def hard_negatives(
     sorts at most k * n_partitions rows per anchor — never a full scored
     corpus copy in one task. Output:
     (anchor_id, anchor_label, vec_id, label, score, rank).
+
+    The cross-join scoring still runs the per-element interpreted HOF
+    fold that :func:`knn_batch` replaced with one Arrow kernel; this
+    operator is the next candidate for the same kernel.
     """
     qv = to_double_array(vec_col)
     a = F.broadcast(

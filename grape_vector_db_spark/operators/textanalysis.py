@@ -316,10 +316,20 @@ def fingerprints(
     min_gram_hash = min 32-bit hash over character k-grams of the
     normalized text (winnowing-style: stable under small local edits,
     usable as a cheap near-dup bucket key).
+
+    The normalized text is projected once as a column, so the per-k-gram
+    lambda reads it instead of re-normalizing the whole text for every
+    k-gram (O(L^2) per document). CollapseProject keeps the two projects
+    apart because ``_norm`` has several non-cheap consumers.
     """
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.col("_norm")
     return df.select(
         F.col(id_col).alias("doc_id"),
+        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")).alias(
+            "_norm"
+        ),
+    ).select(
+        "doc_id",
         F.md5(norm).alias("exact_fp"),
         F.array_min(
             F.transform(

@@ -32,14 +32,20 @@ def test_knn_is_shuffle_free(spark, emb):
     assert "Exchange" not in plan
 
 
-def test_knn_batch_broadcasts_queries(spark, emb):
-    """Batch k-NN must broadcast the query side (corpus scanned once, no
-    corpus shuffle before scoring)."""
+def test_knn_batch_scores_in_one_scan_kernel(spark, emb):
+    """Batch k-NN scores every query in ONE MapInArrow kernel fed by a
+    single corpus scan: no join, and no Exchange below the scoring (the
+    only shuffle is the per-query window over the kernel's candidates)."""
     queries = emb.where(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     plan = plan_of(search.knn_batch(emb, queries, k=3))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("InMemoryTableScan") == 1
+    assert "Join" not in plan
+    below = plan[plan.index("MapInArrow"):]
+    assert "InMemoryTableScan" in below
+    assert "Exchange" not in below
 
 
 def test_filter_pushdown_reaches_parquet(spark):

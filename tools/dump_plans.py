@@ -17,7 +17,7 @@ from grape_vector_db_spark.session import get_spark  # noqa: E402
 
 SHOWCASE = [
     ("knn_cosine", "zero-shuffle scan -> cosine -> TakeOrderedAndProject"),
-    ("knn_batch", "broadcast query table, corpus scanned once, window top-k"),
+    ("knn_batch", "one Arrow scoring kernel over a single corpus scan, window top-k"),
     ("bm25", "postings filtered to query terms, broadcast stats, one final agg"),
     ("hybrid_rrf", "three candidate sub-plans -> union -> rank window -> agg"),
     ("hamming_topk", "packed-bits stage-1 scan -> broadcast rescore join"),
