@@ -648,10 +648,10 @@ def q_simhash_pairs(spark, sf_dir):
 
 def q_embedding_neardup(spark, sf_dir):
     """Exact all-pairs embedding near-dup via the distributed BLOCK-GEMM —
-    the default route: no driver collect, no corpus broadcast, no row cap
-    (vs the driver-matrix _fast path that regressed r2), and the dot
-    products run in BLAS instead of a per-pair Catalyst lambda (vs the
-    expression-fold equi-join — measured 1.7 s vs 11.9 s at sf0.1)."""
+    the default route: no driver collect, no corpus broadcast, no row cap,
+    and the dot products run in BLAS instead of a per-pair Catalyst lambda
+    (vs the expression-fold equi-join — measured 1.7 s vs 11.9 s at
+    sf0.1)."""
     return dedup.embedding_neardup_pairs_gemm(_emb(spark, sf_dir), threshold=0.5)
 
 

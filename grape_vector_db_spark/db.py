@@ -26,7 +26,6 @@ QueryOptimizer clamps.
 from __future__ import annotations
 
 import functools
-import os
 import time
 from collections.abc import Sequence
 from contextlib import contextmanager
@@ -102,11 +101,8 @@ class GrapeVectorDB:
     # most this many ids (~8 bytes/id raw; 1M ids is a ~20 MB hash
     # relation — comfortably under Spark's 8 GB broadcast cap while
     # sparing the corpus a full shuffle+sort). Estimates past the bound
-    # keep the shuffle semi-join. Overridable per deployment via
-    # $SPARK_GRAFT_GATE_BROADCAST_MAX.
-    GATE_BROADCAST_MAX_IDS = int(
-        os.environ.get("SPARK_GRAFT_GATE_BROADCAST_MAX", 1_000_000)
-    )
+    # keep the shuffle semi-join.
+    GATE_BROADCAST_MAX_IDS = 1_000_000
 
     def __init__(
         self,

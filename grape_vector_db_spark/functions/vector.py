@@ -182,3 +182,14 @@ def fold_norms(X: np.ndarray) -> np.ndarray:
     for i in range(X.shape[1]):
         acc += X[:, i] * X[:, i]
     return np.sqrt(acc)
+
+
+def rounded_cosines(dots: np.ndarray, na: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    """The BLAS pair kernels' cosine: ``dots / (na * nb)`` under numpy
+    broadcasting, 0.0 where that divisor is not positive (a zero norm, as
+    in :func:`cosine_from_parts`), rounded to 6 dp. The one definition
+    shared by the all-pairs, pair-verify and block top-k kernels."""
+    denom = na * nb
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.where(denom > 0, dots / denom, 0.0)
+    return np.round(cos, 6)

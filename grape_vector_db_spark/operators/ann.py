@@ -48,6 +48,7 @@ from ..functions.vector import (
     dot,
     fold_dots,
     l2_norm,
+    rounded_cosines,
     to_double_array,
     vector_lit,
 )
@@ -1589,15 +1590,12 @@ def _block_local_topk(xids, yids, X, Y, k: int, same_block: bool):
     :func:`knn_graph`. ``yids`` MUST be sorted ascending: the tie-break
     then falls out of a single stable argsort on the negated rounded
     scores (no per-row lexsort loop). Cosine follows the repo
-    convention (_gemm_pairs): 6-dp round, zero-norm rows score 0.0.
-    Self-pairs (same id on both sides) are excluded. Returns a pandas
-    DataFrame (src, dst, cosine) or None."""
+    convention (:func:`rounded_cosines`): 6-dp round, zero-norm rows
+    score 0.0. Self-pairs (same id on both sides) are excluded. Returns a
+    pandas DataFrame (src, dst, cosine) or None."""
     xn = np.sqrt((X * X).sum(axis=1))
     yn = np.sqrt((Y * Y).sum(axis=1))
-    denom = xn[:, None] * yn[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        S = np.where(denom > 0, (X @ Y.T) / denom, 0.0)
-    S = np.round(S, 6)
+    S = rounded_cosines(X @ Y.T, xn[:, None], yn[None, :])
     if same_block:
         S = S.copy()
         S[xids[:, None] == yids[None, :]] = -np.inf

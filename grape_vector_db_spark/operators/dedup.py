@@ -28,14 +28,18 @@ oracle reproduces results exactly.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h32, h32_word
 from ..functions.text import tokens, word_grams, ws_tokens
-from ..functions.vector import cosine_from_parts, dot, l2_norm, to_double_array
+from ..functions.vector import (
+    cosine_from_parts,
+    dot,
+    l2_norm,
+    rounded_cosines,
+    to_double_array,
+)
 
 
 def _require_integer_ids(df: DataFrame, cols, where: str) -> None:
@@ -1023,10 +1027,7 @@ def _gemm_pairs(xids, yids, X, Y, same_block: bool, threshold: float):
 
     xn = np.sqrt((X * X).sum(axis=1))
     yn = np.sqrt((Y * Y).sum(axis=1))
-    denom = xn[:, None] * yn[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        S = np.where(denom > 0, (X @ Y.T) / denom, 0.0)
-    S = np.round(S, 6)
+    S = rounded_cosines(X @ Y.T, xn[:, None], yn[None, :])
     if same_block:
         mask = (S >= threshold) & (xids[:, None] < yids[None, :])
         xi, yi = np.nonzero(mask)
@@ -1061,11 +1062,11 @@ def embedding_neardup_pairs_gemm(
 
     vs the expression-fold equi-join (embedding_neardup_pairs): the dot
     product moves from a per-pair Catalyst lambda (~n^2*d interpreted
-    evals) into n^2*d FLOPs inside BLAS — measured 5-10x faster. vs the
-    driver-matrix path (_fast): no driver collect, no torrent broadcast,
-    no row cap — every task holds only two blocks (size n/B*d*8 bytes;
-    pick B so that's tens of MB at your corpus size). Sum order differs
-    from the fold by ~1e-15; absorbed by the 6-dp round.
+    evals) into n^2*d FLOPs inside BLAS — measured 5-10x faster. No
+    driver collect, no broadcast matrix, no row cap — every task holds
+    only two blocks (size n/B*d*8 bytes; pick B so that's tens of MB at
+    your corpus size). Sum order differs from the fold by ~1e-15;
+    absorbed by the 6-dp round. NULL vectors never pair, as in the fold.
 
     ``n_blocks`` defaults to ``ceil(n_rows / rows_per_block)`` from a cheap
     count (parquet-metadata-fast), so a small corpus runs as a handful of
@@ -1083,6 +1084,10 @@ def embedding_neardup_pairs_gemm(
     if n_blocks is None:
         n_blocks = max(1, math.ceil(emb.count() / rows_per_block))
     v = to_double_array(vec_col)
+    # NULL vectors drop before either arm: collect_list skips a NULL
+    # vector but keeps its id, which would put ids and matrix rows out
+    # of step
+    emb = emb.where(F.col(vec_col).isNotNull())
 
     def pairs_of(xids, yids, X, Y, same_block):
         out = _gemm_pairs(xids, yids, X, Y, same_block, threshold)
@@ -1260,7 +1265,6 @@ def embedding_neardup_pairs_lsh(
 
     if n_planes is None:
         n = known_count if known_count is not None else emb.count()
-        known_count = n  # reuse for the verify's block sizing
         n_planes = lsh_autosize_planes(n)
         if bucket_cap is None and n > LSH_AUTO_CAP_THRESHOLD:
             bucket_cap = 10 * LSH_TARGET_BUCKET
@@ -1341,228 +1345,45 @@ def embedding_neardup_pairs_lsh(
         .select("p.a", "p.b")
         .distinct()
     )
-    # size-routed exact verify (see _cosine_verify_auto): hydration
-    # joins while the vector side broadcasts, per-block vector shipping
-    # past the row bound (pairs then carry 16 bytes, not ~1 KB)
-    return _cosine_verify_auto(
-        cand, emb, emb, threshold, "a", "b", id_col, vec_col,
-        a_count=known_count, b_count=known_count,
-    )
-
-
-# Row bound above which the exact cosine verify ships vectors per BLOCK
-# instead of hydrating both vectors onto every candidate pair row. Below
-# it the vector side broadcasts into the hydration joins (no shuffle)
-# and the per-pair Arrow columns are cheap — measured FASTER at sf0.1
-# (3.3 vs 3.6 s interleaved A/B, 472k candidates, 2k vectors), so small
-# corpora keep the simple shape. Above it the hydration joins must
-# shuffle ~1 KB of vector per candidate (twice), while block shipping
-# moves 16 bytes per pair + each 4096-row block matrix once — the
-# guide §8 proxy-shuffle rule. Env-overridable for cluster tuning.
-_BLOCK_VERIFY_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BLOCK_VERIFY_MIN_ROWS", "200000")
-)
-
-
-def _cosine_verify_auto(
-    cand: DataFrame,
-    a_emb: DataFrame,
-    b_emb: DataFrame,
-    threshold: float,
-    a_name: str = "a",
-    b_name: str = "b",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    a_count: int | None = None,
-    b_count: int | None = None,
-) -> DataFrame:
-    """Route the exact pair verify by corpus size: per-pair hydration
-    joins + :func:`_arrow_cosine_verify` while every vector side is
-    small enough to broadcast (counts unknown => assumed small — callers
-    that know their corpus is big pass ``a_count``/``b_count``, and the
-    autosized paths always do), :func:`_block_cosine_verify` past
-    ``_BLOCK_VERIFY_MIN_ROWS``. Both paths emit bit-identical rows
-    (two-way exceptAll pinned in tests)."""
-    known = max(a_count or 0, b_count or 0)
-    if known > _BLOCK_VERIFY_MIN_ROWS:
-        return _block_cosine_verify(
-            cand, a_emb, b_emb, threshold, a_name, b_name, id_col,
-            vec_col, a_count=a_count, b_count=b_count,
-        )
-    v = to_double_array(vec_col)
-    paired = cand.join(
-        a_emb.select(F.col(id_col).alias(a_name), v.alias("va")), a_name
-    ).join(
-        b_emb.select(F.col(id_col).alias(b_name), v.alias("vb")), b_name
-    )
-    return _arrow_cosine_verify(paired, threshold, a_name, b_name)
-
-
-def _block_cosine_verify(
-    cand: DataFrame,
-    a_emb: DataFrame,
-    b_emb: DataFrame,
-    threshold: float,
-    a_name: str = "a",
-    b_name: str = "b",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    a_count: int | None = None,
-    b_count: int | None = None,
-    rows_per_block: int = 4096,
-) -> DataFrame:
-    """Exact cosine verify of candidate id PAIRS with per-BLOCK vector
-    shipping (guide §8 "decide with small rows, move big rows once"):
-    the old shape joined both 64-double vectors onto every pair row, so
-    the Arrow boundary carried ~1 KB per candidate (measured ~480 MB /
-    ~5.7 s for the 472k sf0.1 LSH candidates — the dominant phase of
-    embedding_neardup_lsh, while the dots themselves are ~30 MFLOP).
-    Here pairs carry 16 bytes of ids; vectors travel once per (a-block,
-    b-block) verify task as two dense matrices (the knn_graph /
-    pairs_gemm block idiom), a ~60x per-pair byte cut that grows with
-    dim. Tasks salt by pair hash only while Ba*Bb alone cannot fill the
-    cluster (salt count = ceil(defaultParallelism / (Ba*Bb)), so big
-    corpora pay zero matrix duplication and small ones stay parallel).
-
-    Numerics are IDENTICAL to :func:`_arrow_cosine_verify`: the same
-    numpy row-gather, (A*A).sum / sqrt norms, row-wise einsum dot,
-    np.round(cos, 6), zero-norm -> 0.0 — per-pair results are the same
-    doubles (two-way exceptAll pinned in tests). Ids absent from the
-    vector tables drop, matching the old inner hydration joins; NULL
-    vectors are excluded from the matrices (the old shape crashed on
-    them inside np.asarray). Requires integral ids (pmod blocking) —
-    every caller's contract already.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = cand.sparkSession
-    v = to_double_array(vec_col)
-
-    def _mats(emb: DataFrame, n: int):
-        nblocks = max(1, -(-int(n) // rows_per_block))
-        base = emb.select(F.col(id_col).alias("id"), v.alias("v")).where(
-            F.col("v").isNotNull()
-        )
-        # two collect_lists over one grouped row stream stay aligned
-        # (the knn_graph mats contract); localCheckpoint, not persist —
-        # freed by the ContextCleaner with the returned plan
-        m = (
-            base.select(
-                "id", "v",
-                F.pmod(F.col("id"), F.lit(nblocks)).cast("int").alias("block"),
-            )
-            .groupBy("block")
-            .agg(
-                F.collect_list("id").alias("ids"),
-                F.collect_list("v").alias("vecs"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        return nblocks, m
-
-    na = a_count if a_count is not None else a_emb.count()
-    ba_n, mats_a = _mats(a_emb, na)
-    if b_emb is a_emb:
-        bb_n, mats_b = ba_n, mats_a
-    else:
-        nb = b_count if b_count is not None else b_emb.count()
-        bb_n, mats_b = _mats(b_emb, nb)
-    par = spark.sparkContext.defaultParallelism
-    n_salt = max(1, -(-par // max(ba_n * bb_n, 1)))
-    grouped = cand.groupBy(
-        F.pmod(F.col(a_name), F.lit(ba_n)).cast("int").alias("_ba"),
-        F.pmod(F.col(b_name), F.lit(bb_n)).cast("int").alias("_bb"),
-        F.pmod(F.xxhash64(F.col(a_name), F.col(b_name)), F.lit(n_salt))
-        .cast("int")
-        .alias("_s"),
-    ).agg(
-        # two aligned collect_lists (one grouped row stream feeds both
-        # buffers — the mats contract above): they cross into the worker
-        # as plain numpy int arrays, where a struct list would cost one
-        # python dict access per pair
-        F.collect_list(F.col(a_name)).alias("pas"),
-        F.collect_list(F.col(b_name)).alias("pbs"),
-    )
-    joined = grouped.join(
-        mats_a.select(
-            F.col("block").alias("_ba"),
-            F.col("ids").alias("ids_a"),
-            F.col("vecs").alias("vecs_a"),
-        ),
-        "_ba",
-    ).join(
-        mats_b.select(
-            F.col("block").alias("_bb"),
-            F.col("ids").alias("ids_b"),
-            F.col("vecs").alias("vecs_b"),
-        ),
-        "_bb",
-    )
-    thr = float(threshold)
-
-    def verify(batches):
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                ai = np.asarray(row.ids_a, dtype=np.int64)
-                bi = np.asarray(row.ids_b, dtype=np.int64)
-                pa = np.asarray(row.pas, dtype=np.int64)
-                if not len(ai) or not len(bi) or not len(pa):
-                    continue
-                A = np.asarray(list(row.vecs_a), dtype=np.float64)
-                Bv = np.asarray(list(row.vecs_b), dtype=np.float64)
-                oa, ob = np.argsort(ai), np.argsort(bi)
-                ai, A = ai[oa], A[oa]
-                bi, Bv = bi[ob], Bv[ob]
-                pb = np.asarray(row.pbs, dtype=np.int64)
-                ia = np.clip(np.searchsorted(ai, pa), 0, len(ai) - 1)
-                ib = np.clip(np.searchsorted(bi, pb), 0, len(bi) - 1)
-                ok = (ai[ia] == pa) & (bi[ib] == pb)
-                if not ok.any():
-                    continue
-                Aa, Bb = A[ia[ok]], Bv[ib[ok]]
-                denom = np.sqrt((Aa * Aa).sum(axis=1)) * np.sqrt(
-                    (Bb * Bb).sum(axis=1)
-                )
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(
-                        denom > 0, np.einsum("ij,ij->i", Aa, Bb) / denom, 0.0
-                    )
-                cos = np.round(cos, 6)
-                m = cos >= thr
-                if m.any():
-                    outs.append((pa[ok][m], pb[ok][m], cos[m]))
-            if outs:
-                yield pd.DataFrame(
-                    {
-                        a_name: np.concatenate([o[0] for o in outs]),
-                        b_name: np.concatenate([o[1] for o in outs]),
-                        "cosine": np.concatenate([o[2] for o in outs]),
-                    }
-                )
-
-    return joined.mapInPandas(
-        verify, f"{a_name} long, {b_name} long, cosine double"
+    return _arrow_cosine_verify(
+        cand, emb, emb, threshold, "a", "b", id_col, vec_col
     )
 
 
 def _arrow_cosine_verify(
-    paired: DataFrame,
+    cand: DataFrame,
+    a_emb: DataFrame,
+    b_emb: DataFrame,
     threshold: float,
     a_name: str = "a",
     b_name: str = "b",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Vectorized Arrow verify over ``(a_name, b_name, va, vb)`` rows:
-    OR-amplification multiplies candidates, and a Catalyst higher-order
-    fold evaluates its lambda per element (candidates x dim interpreted
-    calls); one numpy einsum per batch does the same dot products in
-    BLAS time. Sum order differs from the fold by ~1e-15 — absorbed by
-    the 6-dp round (same note as the GEMM path). Zero-norm vectors
-    score 0.0 per the engine convention."""
+    """Exact cosine verify of candidate id pairs ``(a_name, b_name)``:
+    two inner joins hydrate the ``a_emb`` and ``b_emb`` vectors onto
+    every pair (ids absent from a vector table, and NULL vectors, drop
+    out), then one vectorized Arrow pass scores them. OR-amplification
+    multiplies candidates, and a Catalyst higher-order fold evaluates its
+    lambda per element (candidates x dim interpreted calls); one numpy
+    einsum per batch does the same dot products in BLAS time. Sum order
+    differs from the fold by ~1e-15 — absorbed by the 6-dp round (same
+    note as the GEMM path). Zero-norm vectors score 0.0 per the engine
+    convention."""
     import numpy as np
     import pandas as pd
     from collections.abc import Iterator
+
+    v = to_double_array(vec_col)
+
+    def side(emb: DataFrame, name: str, vec: str) -> DataFrame:
+        return emb.select(F.col(id_col).alias(name), v.alias(vec)).where(
+            F.col(vec).isNotNull()
+        )
+
+    paired = cand.join(side(a_emb, a_name, "va"), a_name).join(
+        side(b_emb, b_name, "vb"), b_name
+    )
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1570,12 +1391,11 @@ def _arrow_cosine_verify(
                 continue
             A = np.asarray(list(pdf["va"]), dtype=np.float64)
             B = np.asarray(list(pdf["vb"]), dtype=np.float64)
-            denom = np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(
-                    denom > 0, np.einsum("ij,ij->i", A, B) / denom, 0.0
-                )
-            cos = np.round(cos, 6)
+            cos = rounded_cosines(
+                np.einsum("ij,ij->i", A, B),
+                np.sqrt((A * A).sum(axis=1)),
+                np.sqrt((B * B).sum(axis=1)),
+            )
             m = cos >= threshold
             if m.any():
                 yield pd.DataFrame(
@@ -1641,7 +1461,6 @@ def incremental_embedding_neardup(
                 "build; none of the three is recoverable from its rows)"
             )
         n = known_count if known_count is not None else corpus_emb.count()
-        known_count = n  # reuse for the verify's block sizing
         n_planes = lsh_autosize_planes(n)
     cb = (
         corpus_buckets_df
@@ -1662,84 +1481,11 @@ def incremental_embedding_neardup(
         .select("batch_id", "corpus_id")
         .distinct()
     )
-    # size-routed exact verify (see _cosine_verify_auto): the batch
-    # side is delta-sized; a big corpus side ships per-block instead of
-    # per-pair
-    return _cosine_verify_auto(
+    return _arrow_cosine_verify(
         cand, batch_emb, corpus_emb, threshold,
         a_name="batch_id", b_name="corpus_id",
-        id_col=id_col, vec_col=vec_col, b_count=known_count,
+        id_col=id_col, vec_col=vec_col,
     )
-
-
-def embedding_neardup_pairs_fast(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_broadcast_rows: int = 50_000,
-    known_count: int | None = None,
-) -> DataFrame:
-    """BLAS-backed exact all-pairs cosine for corpora whose embedding matrix
-    fits comfortably in driver+executor memory (rows*dim*8 bytes;
-    50k x 768 ~ 300 MB — the cap bounds the driver's transient copy, which
-    is why it defaults conservative; VERDICT r1 item 6).
-
-    One side is broadcast as a dense numpy matrix; each Arrow batch of the
-    other side computes a (batch x N) cosine block via matmul and emits the
-    above-threshold (a < b) pairs. ~10x faster than the expression fold.
-    The matrix is pulled with Arrow (`toPandas`) — columnar transfer, no
-    per-row Row objects — then broadcast torrent-style to executors.
-    Falls back to :func:`embedding_neardup_pairs` (blocked equi-join, no
-    broadcast, unbounded scale) when the corpus is too large — that is also
-    the bit-exact-ordered variant; this one sums in BLAS order (differences
-    ~1e-15, absorbed by the 6-dp rounding).
-    """
-    import numpy as np
-
-    # a separate count() job per call is pure overhead when the caller
-    # already knows the corpus size (judge r2 "What's wrong" #5)
-    n = known_count if known_count is not None else emb.count()
-    if n > max_broadcast_rows:
-        return embedding_neardup_pairs(emb, threshold, id_col, vec_col)
-
-    pdf0 = emb.select(
-        F.col(id_col).alias("id"), to_double_array(vec_col).alias("v")
-    ).toPandas()
-    ids = pdf0["id"].to_numpy()
-    if len(pdf0) == 0:  # np.asarray([]) is 1-D; axis=1 would crash
-        return emb.sparkSession.createDataFrame(
-            [], "a long, b long, cosine double"
-        )
-    M = np.asarray(list(pdf0["v"]), dtype=np.float64)
-    nrm = np.sqrt((M * M).sum(axis=1))
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((ids, M, nrm))
-
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_ids, b_M, b_nrm = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.asarray(list(pdf["v"]), dtype=np.float64)
-            xids = pdf["id"].to_numpy()
-            xn = np.sqrt((X * X).sum(axis=1))
-            denom = xn[:, None] * b_nrm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.where(denom > 0, (X @ b_M.T) / denom, 0.0)
-            S = np.round(S, 6)
-            mask = (S >= threshold) & (xids[:, None] < b_ids[None, :])
-            xi, yi = np.nonzero(mask)
-            yield pd.DataFrame(
-                {"a": xids[xi], "b": b_ids[yi], "cosine": S[xi, yi]}
-            )
-
-    src = emb.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("v"))
-    return src.mapInPandas(run, "a long, b long, cosine double")
 
 
 def simhash(
@@ -2011,8 +1757,12 @@ def embedding_neardup_pairs(
     n_blocks: int = 16,
 ) -> DataFrame:
     """(a, b, cosine) pairs with cosine >= threshold, a < b — exact
-    all-pairs. Correct at any scale but O(n^2); the scale path prunes
-    candidates with ann.random_projection_buckets first (same verify step).
+    all-pairs as a left-to-right expression fold. This is the fold-order
+    reference the BLAS paths (:func:`embedding_neardup_pairs_gemm`,
+    :func:`embedding_neardup_pairs_lsh`, :func:`semdedup_pairs`) are
+    pinned against in tests; they sum in BLAS order and must agree after
+    the 6-dp round. O(n^2) at any scale. Vectors that are NULL drop out
+    before pairing, on every one of those paths.
 
     Shape: a **blocked self-join** — both sides get ``block = id % B`` and
     meet through a broadcast (block_a, block_b) pair table, making both
@@ -2024,7 +1774,7 @@ def embedding_neardup_pairs(
     """
     spark = emb.sparkSession
     v = to_double_array(vec_col)
-    base = emb.select(
+    base = emb.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         v.alias("v"),
         l2_norm(v).alias("nrm"),
@@ -2109,8 +1859,11 @@ def semdedup_pairs(
         assigned.groupBy("cluster").count().agg(F.max("count")).first()[0]
     )
     nb = max(1, math.ceil((max_c or 0) / rows_per_block))
+    # NULL vectors drop before the per-block lists (collect_list would
+    # skip the vector but keep its id, misaligning ids and matrix rows)
     base = (
-        emb.select(F.col(id_col).alias("id"), v.alias("v"))
+        emb.where(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("id"), v.alias("v"))
         .join(assigned.select("id", "cluster"), "id")
     )
     base = base.withColumn(

@@ -16,6 +16,8 @@
 5. simhash derives its words by digest quartering (h32_word — one md5
    per term instead of one per word), bit-identical to the updated
    oracle family.
+6. A NULL embedding never pairs on any embedding pair path (fold, LSH,
+   incremental, GEMM, SemDeDup); the BLAS paths used to crash on it.
 """
 
 from __future__ import annotations
@@ -131,3 +133,86 @@ def test_simhash_words_are_digest_quarters(spark):
         if vote > 0:
             expect |= 1 << j
     assert fp == expect
+
+
+class TestNullVectorsNeverPair:
+    """A NULL embedding drops out of every embedding pair path, as it
+    does in the fold reference, instead of crashing the numpy matrix
+    build or shifting ids against matrix rows. Threshold 0.0 makes any
+    surviving NULL-vector or dangling-id pair visible."""
+
+    ROWS = [
+        (1, [1.0, 0.0]),
+        (2, [1.0, 0.01]),
+        (4, [-1.0, 0.0]),
+        (5, [-1.0, -0.01]),
+        (3, None),  # not first: the RP dimension comes from the first row
+    ]
+    SCHEMA = "vec_id long, embedding array<double>"
+
+    @staticmethod
+    def _rows(df, a="a", b="b"):
+        return sorted((r[a], r[b], r["cosine"]) for r in df.collect())
+
+    def _fold(self, spark):
+        emb = spark.createDataFrame(self.ROWS, self.SCHEMA)
+        rows = self._rows(dedup.embedding_neardup_pairs(emb, threshold=0.0))
+        assert rows and not any(3 in r[:2] for r in rows)
+        return emb, rows
+
+    def test_lsh_self_join(self, spark):
+        emb, fold = self._fold(spark)
+        # one plane per table: the NULL vector's bucket 0 always holds
+        # one of the two opposite vector groups, so it is a candidate
+        lsh = dedup.embedding_neardup_pairs_lsh(
+            emb, threshold=0.0, n_planes=1, n_tables=2, seed=7
+        )
+        assert self._rows(lsh) == fold
+
+    def test_incremental_cross_frames_with_dangling_index_id(self, spark):
+        from grape_vector_db_spark.operators import ann
+
+        emb, fold = self._fold(spark)
+        batch_ids, corpus_ids = {2, 5, 3}, {1, 4}
+        batch = spark.createDataFrame(
+            [r for r in self.ROWS if r[0] in batch_ids], self.SCHEMA
+        )
+        corpus = spark.createDataFrame(
+            [r for r in self.ROWS if r[0] in corpus_ids], self.SCHEMA
+        )
+        # the prebuilt index holds an id the corpus frame no longer has
+        index = ann.random_projection_tables(
+            corpus.unionByName(
+                spark.createDataFrame([(999, [1.0, 0.0])], self.SCHEMA)
+            ),
+            n_planes=1, n_tables=2, seed=7,
+        )
+        got = dedup.incremental_embedding_neardup(
+            batch, corpus, threshold=0.0, n_planes=1, n_tables=2, seed=7,
+            corpus_buckets_df=index,
+        )
+        expect = sorted(
+            (a, b, c) if a in batch_ids else (b, a, c)
+            for a, b, c in fold
+            if {a, b} & batch_ids and {a, b} & corpus_ids
+        )
+        assert expect
+        assert self._rows(got, "batch_id", "corpus_id") == expect
+
+    @pytest.mark.parametrize("n_blocks", [1, 2])
+    def test_gemm(self, spark, n_blocks):
+        emb, fold = self._fold(spark)
+        gemm = dedup.embedding_neardup_pairs_gemm(
+            emb, threshold=0.0, n_blocks=n_blocks
+        )
+        assert self._rows(gemm) == fold
+
+    def test_semdedup(self, spark):
+        emb, fold = self._fold(spark)
+        assigned = spark.createDataFrame(
+            [(i, 0) for i, _ in self.ROWS], "id long, cluster int"
+        )
+        pairs = dedup.semdedup_pairs(
+            emb, assigned, threshold=0.0, rows_per_block=2
+        )
+        assert self._rows(pairs) == fold

@@ -1,14 +1,7 @@
-"""Round-12 optimization pins.
-
-1. The Arrow RP fold kernel is bit-identical to the SQL
-   aggregate(zip_with(...)) fold it replaced — including the degenerate
-   rows (NULL vector, NULL element, wrong length, NaN, float32 input)
-   and Spark's NaN-greater-than-everything CASE semantics.
-2. The block-shipping cosine verify emits exactly the rows of the
-   per-pair hydration verify, same doubles, on both the self-join and
-   the cross-frame (batch x corpus) shapes.
-3. The size router picks hydration below the row bound and block
-   shipping above it.
+"""Round-12 optimization pins: the Arrow RP fold kernel is bit-identical
+to the SQL aggregate(zip_with(...)) fold it replaced — including the
+degenerate rows (NULL vector, NULL element, wrong length, NaN, float32
+input) and Spark's NaN-greater-than-everything CASE semantics.
 """
 from __future__ import annotations
 
@@ -17,13 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from grape_vector_db_spark.operators import ann, dedup
-from grape_vector_db_spark.operators.dedup import (
-    _arrow_cosine_verify,
-    _block_cosine_verify,
-    _cosine_verify_auto,
-)
-from grape_vector_db_spark.functions.vector import to_double_array
+from grape_vector_db_spark.operators import ann
 
 
 def _sql_tables(df, n_planes, n_tables, dim, seed, vec="embedding"):
@@ -109,85 +96,3 @@ def test_rp_kernel_float32_and_string_ids(spark, edge):
     out = ann.random_projection_buckets(sid, n_planes=3, seed=5, dim=8)
     assert out.schema["id"].dataType.simpleString() == "string"
     assert out.count() == edge.count()
-
-
-def _bucket_cand(emb):
-    buckets = ann.random_projection_tables(emb, n_planes=3, n_tables=2, seed=9)
-    return (
-        buckets.alias("x")
-        .join(buckets.alias("y"), ["tbl", "bucket"])
-        .where(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .distinct()
-    )
-
-
-def test_block_verify_equals_hydration_verify_self_join(emb):
-    cand = _bucket_cand(emb)
-    v = to_double_array("embedding")
-    base = emb.select(F.col("vec_id").alias("id"), v.alias("v"))
-    paired = cand.join(base.selectExpr("id as a", "v as va"), "a").join(
-        base.selectExpr("id as b", "v as vb"), "b"
-    )
-    old = _arrow_cosine_verify(paired, 0.2)
-    new = _block_cosine_verify(
-        cand, emb, emb, 0.2, "a", "b", "vec_id", "embedding",
-        rows_per_block=64,  # force a real multi-block split
-    )
-    _same(new, old)
-    assert new.count() > 0
-
-
-def test_block_verify_equals_hydration_verify_cross_frames(emb):
-    is_b = F.col("vec_id") % 7 == 0
-    batch, corpus = emb.where(is_b), emb.where(~is_b)
-    cand = (
-        _bucket_cand(emb)
-        .where((F.col("a") % 7 == 0) & (F.col("b") % 7 != 0))
-        .selectExpr("a as batch_id", "b as corpus_id")
-    )
-    v = to_double_array("embedding")
-    paired = cand.join(
-        batch.select(F.col("vec_id").alias("batch_id"), v.alias("va")),
-        "batch_id",
-    ).join(
-        corpus.select(F.col("vec_id").alias("corpus_id"), v.alias("vb")),
-        "corpus_id",
-    )
-    old = _arrow_cosine_verify(paired, 0.2, "batch_id", "corpus_id")
-    new = _block_cosine_verify(
-        cand, batch, corpus, 0.2, "batch_id", "corpus_id",
-        "vec_id", "embedding", rows_per_block=64,
-    )
-    _same(new, old)
-
-
-def test_block_verify_drops_dangling_and_null_vector_ids(spark):
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [1.0, 0.1]), (3, None)],
-        "vec_id long, embedding array<double>",
-    )
-    cand = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 999)], "a long, b long"
-    )
-    out = _block_cosine_verify(cand, emb, emb, 0.0, "a", "b", "vec_id", "embedding")
-    rows = out.collect()
-    assert [(r["a"], r["b"]) for r in rows] == [(1, 2)]
-
-
-def test_verify_router_picks_block_path_past_bound(emb, monkeypatch):
-    cand = _bucket_cand(emb).limit(50)
-    monkeypatch.setattr(dedup, "_BLOCK_VERIFY_MIN_ROWS", 10)
-    routed = _cosine_verify_auto(
-        cand, emb, emb, 0.2, a_count=500, b_count=500
-    )
-    # the block path groups pairs into collect_lists — pin the plan node
-    plan = routed._jdf.queryExecution().optimizedPlan().toString()
-    assert "collect_list" in plan
-    # and the rows equal the hydration verify's
-    v = to_double_array("embedding")
-    base = emb.select(F.col("vec_id").alias("id"), v.alias("v"))
-    paired = cand.join(base.selectExpr("id as a", "v as va"), "a").join(
-        base.selectExpr("id as b", "v as vb"), "b"
-    )
-    _same(routed, _arrow_cosine_verify(paired, 0.2))
